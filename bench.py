@@ -4,6 +4,9 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+Usage: python bench.py [query ...]
+(no names = the HEADLINE set; named queries run under the same protocol)
+
 Each query is timed as a full action (count on the result plan) after a
 shared warmup that loads table metadata, so JVM/session startup is not
 billed to any query.
@@ -13,7 +16,12 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
+
+from erddap2agol_spark.plans.physical import release_checkpoints
+from erddap2agol_spark.queries import REGISTRY, _load_all
+from erddap2agol_spark.session import get_spark
 
 HEADLINE = [
     "pricing_summary",
@@ -84,11 +92,11 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from erddap2agol_spark.operators.dedup import release_checkpoints
-    from erddap2agol_spark.queries import REGISTRY, _load_all
-    from erddap2agol_spark.session import get_spark
-
     _load_all()
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        sys.exit(f"usage: python bench.py [query ...]\nunknown: {' '.join(unknown)}")
     spark = get_spark(app_name="bench")
 
     # warmup: touch every table's footer (schema read) and run one tiny
@@ -108,10 +116,8 @@ def main() -> None:
     timings: dict[str, float] = {}
     n_runs: dict[str, int] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        spec = REGISTRY.get(name)
-        if spec is None:
-            continue
+    for name in names:
+        spec = REGISTRY[name]
         best = float("inf")
         runs = 0
         try:

@@ -23,27 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import truncate_lineage
-
-#: Target rows per task for an iterated (loop-invariant) relation.  An
-#: iterative pass over a SMALL graph is task-launch floor, not data: a
-#: 3.6k-edge graph iterated 4 rounds at 32-partition granularity launches
-#: ~400 near-empty tasks where 12 would do (measured: LPA on the sf0.1
-#: repeat-co-purchase graph 4.5 s -> 2.0 s from compaction alone, guide
-#: §2.6 scale-adaptive partitioning).  Big graphs are unaffected — the
-#: count-derived partition target caps at defaultParallelism, and AQE can
-#: still split skewed partitions downstream.
-LOOP_ROWS_PER_TASK = 400_000
-
-
-def _loop_partitions(n_rows: int, df: DataFrame) -> int:
-    """Partition count for an iterated relation of ``n_rows`` rows:
-    ~:data:`LOOP_ROWS_PER_TASK` rows per task, clamped to
-    [1, defaultParallelism].  Derived from a measured count, so the
-    compaction is scale-adaptive rather than tuned to either local mode
-    or a cluster."""
-    target = -(-int(n_rows) // LOOP_ROWS_PER_TASK)  # ceil div
-    return max(1, min(target, df.sparkSession.sparkContext.defaultParallelism))
+from ..plans.physical import (
+    COPURCHASE_FANOUT_WEIGHT,
+    _loop_partitions,
+    fanout_width,
+    truncate_lineage,
+)
 
 
 def node_degrees(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -138,12 +123,10 @@ def copurchase_edges(
     # a duplicate-heavy caller would prefer the partial-aggregate form
     # it replaces, since there map-side combine does shrink the
     # exchange).  The width is EXPLICIT in the small-input regime
-    # (dedup.fanout_width): the downstream explode is quadratic per
-    # group, and AQE's byte-based coalescing otherwise parks it on a
-    # handful of tasks (5 tasks / 956 ms at sf0.1, measured r10).
-    from .dedup import fanout_width
-
-    width = fanout_width(df, fanout_weight=8)
+    # (fanout_width): the downstream explode is quadratic per group,
+    # and AQE's byte-based coalescing otherwise parks it on a handful
+    # of tasks (5 tasks / 956 ms at sf0.1, measured r10).
+    width = fanout_width(df, fanout_weight=COPURCHASE_FANOUT_WEIGHT)
     sets = (
         df.repartition(width, F.col(group_col))
         if width
@@ -216,7 +199,7 @@ def pagerank(
     plan needs no terminal checkpoint, VERDICT r9 #2), with the
     loop-invariant ``g`` served by in-query exchange reuse rather than
     a checkpoint of its own; callers done with the result free the
-    scaffolding with ``dedup.release_checkpoints(result)``.  The
+    scaffolding with ``physical.release_checkpoints(result)``.  The
     round-k rank vectors form a linear chain, each consumed exactly
     once by round k+1, so materializing them buys nothing.  Turn off
     only for pure-plan inspection.
@@ -264,11 +247,9 @@ def pagerank(
             n_nodes <= broadcast_nodes_max and n_sym >= 8 * n_nodes
         )
         n_known = int(n_nodes)
-        # scale-adaptive loop compaction (see _loop_partitions): size
-        # the per-round relation's task count from the measured n_sym
-        np_ = _loop_partitions(n_sym, deg)
-        if np_ < deg.sparkSession.sparkContext.defaultParallelism:
-            nparts = np_
+        # scale-adaptive loop compaction: size the per-round relation's
+        # task count from the measured n_sym
+        nparts = _loop_partitions(n_sym, deg)
     # deg RIDES the edge relation (the oracle's own ``g`` shape,
     # re-adopted r10 after an interleaved A/B + event-log profile —
     # fresh-session run walls 13.9/7.2/5.7/5.3 s vs the r9/r10
@@ -282,15 +263,16 @@ def pagerank(
     # BroadcastHashJoin + stage boundary PER ROUND — pure sequential
     # driver latency (guide §1.2: the shape of the job beats
     # per-stage byte counts).
-    # int32 deg on the edge relation in the broadcast regime (guide
-    # §2.3 narrower types): deg <= |V|, and the broadcast regime
-    # asserts |V| fits a broadcast relation (hard cap 512M rows), so
-    # deg < 2^31 provably; int->double promotion in the round's
+    # int32 deg on the edge relation when the |V| PROBE chose the
+    # broadcast regime (guide §2.3 narrower types): deg <= |V|, and the
+    # probe asserted |V| fits a broadcast relation (hard cap 512M rows),
+    # so deg < 2^31 provably; int->double promotion in the round's
     # division is exact, identical IEEE quotient.  The unbounded
-    # equi-join regime keeps the long.
+    # equi-join regime and a caller-forced broadcast (no |V| proof)
+    # keep the long.
     dcol = deg.select(
         "src", F.col("deg").cast("int").alias("deg")
-    ) if broadcast_ranks else deg.select("src", "deg")
+    ) if broadcast_ranks and n_known is not None else deg.select("src", "deg")
     g = sym.join(F.broadcast(dcol) if broadcast_ranks else dcol, "src")
     # Materialize g BEFORE the dst repartition, and repartition
     # IN-QUERY over the checkpoint (restructured r10, twice):
@@ -408,10 +390,10 @@ def kcore(
     times (degree count + both semi-join probes), so the logical plan
     would nest 3^rounds copies of the edge build; ``truncate_lineage``
     cuts it each round (reliable checkpoint when the session has a
-    checkpoint dir — set one on a real cluster — else localCheckpoint;
-    see dedup.truncate_lineage).  A finished round's blocks are released
-    EXPLICITLY via ``truncate_lineage(..., release=prev)`` — GC-driven
-    reclamation does not happen under pinned-thread py4j (r9).
+    checkpoint dir — set one on a real cluster — else localCheckpoint).
+    A finished round's blocks are released EXPLICITLY via
+    ``truncate_lineage(..., release=prev)`` — GC-driven reclamation does
+    not happen under pinned-thread py4j (r9).
     """
     if persist_each:
         # edge build ONCE inside the round-0 checkpoint job (see
@@ -432,7 +414,7 @@ def kcore(
         if persist_each:
             # release the previous round once the new checkpoint has
             # materialized (explicit — GC never reclaims these under
-            # pinned-thread py4j; see dedup.truncate_lineage)
+            # pinned-thread py4j)
             nxt = truncate_lineage(nxt, release=cur)
         cur = nxt
     return cur.groupBy(F.col("src").alias("node")).agg(
@@ -505,11 +487,9 @@ def label_propagation(
         )
         # scale-adaptive loop compaction: the probe's n_sym prices the
         # rounds — a small graph iterated at full-cluster granularity is
-        # pure task-launch floor (see _loop_partitions).  None = big
-        # graph, keep ambient parallelism.
-        np_ = _loop_partitions(n_sym, sym)
-        if np_ < sym.sparkSession.sparkContext.defaultParallelism:
-            nparts = np_
+        # pure task-launch floor.  None = big graph, keep ambient
+        # parallelism.
+        nparts = _loop_partitions(n_sym, sym)
     if broadcast_labels or nparts:
         # dst-partitioned form for the rounds: in broadcast mode both
         # per-round aggregates reuse HashPartitioning(dst)
@@ -574,8 +554,8 @@ def pointer_doubling_closure(
     A parent id missing from the table resolves as its child's root
     (dangling-link tolerance).  Rounds multiply lineage (each reads the
     previous table twice), so each round is lineage-truncated like
-    kcore (dedup.truncate_lineage: reliable checkpoint on a configured
-    cluster, localCheckpoint otherwise).
+    kcore (reliable checkpoint on a configured cluster, localCheckpoint
+    otherwise).
     """
     links = nodes.select(
         F.col(node_col).alias("node"),

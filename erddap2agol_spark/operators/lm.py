@@ -37,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import ensure_parallelism
+from ..plans.physical import (
+    ensure_parallelism,
+    release_checkpoints,
+    truncate_lineage,
+)
 from .text import tokens as _text_tokens
 
 #: add-k smoothing constant for the bigram model.
@@ -127,12 +131,10 @@ def bigram_model(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame
     # branch (verified in the executed plan, review r8).
     # truncate_lineage (checkpoint/localCheckpoint), not persist(): the
     # blocks back the returned plan, and callers done with the result
-    # free them explicitly via dedup.release_checkpoints (GC does NOT
-    # reclaim them under pinned-thread py4j — measured r9; see
-    # truncate_lineage).  The relation is vocabulary²-sized either way.
+    # free them explicitly via release_checkpoints (GC does NOT reclaim
+    # them under pinned-thread py4j — measured r9).  The relation is
+    # vocabulary²-sized either way.
     cb_all = bg_all.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("nb"))
-    from .dedup import truncate_lineage
-
     cb_all = truncate_lineage(cb_all)
     cb = cb_all.where(F.col("cur").isNotNull())
     cp = cb.groupBy("prev").agg(F.sum("nb").alias("np"))
@@ -226,10 +228,8 @@ def bigram_cross_entropy_agg(
     — it is also the job-floor-minimal local plan.  Results are
     identical up to float summation order (both sides round before
     grading).  Callers done with the result free the checkpoint blocks
-    via :func:`~..operators.dedup.release_checkpoints`.
+    via :func:`~..plans.physical.release_checkpoints`.
     """
-    from .dedup import truncate_lineage
-
     docs = ensure_parallelism(docs)
     toks = _tokens(F.col(text_col))
     n = F.size(toks)
@@ -520,9 +520,7 @@ def _bpe_train_rows(
     word-frequency table is returned INSTEAD of being released — the one
     corpus-sized aggregate — so an encoder reuses it rather than paying
     a second corpus scan; ownership transfers to the caller
-    (``dedup.release_checkpoints`` when done)."""
-    from .dedup import release_checkpoints, truncate_lineage
-
+    (``physical.release_checkpoints`` when done)."""
     if n_merges <= 0:
         vocab0 = (
             truncate_lineage(token_vocabulary(docs, text_col))
@@ -610,7 +608,7 @@ def bpe_symbol_histogram(
     (TakeOrderedAndProject), and the merge table itself rides in as
     driver literals (it is bpe_train's bounded output).  The returned
     plan is backed by that vocabulary checkpoint: callers done with the
-    result free its blocks via ``dedup.release_checkpoints`` (the same
+    result free its blocks via ``physical.release_checkpoints`` (the same
     terminal-result contract as the near-dup operators).
     """
     rows, raw_pairs, vocab = _bpe_train_rows(
@@ -673,7 +671,7 @@ def bpe_doc_token_counts(
     followed by ONE per-document aggregate.  No per-document Python,
     no window; AQE broadcasts the dictionary when it fits.  The
     returned plan is backed by the vocabulary checkpoint — callers free
-    it via ``dedup.release_checkpoints`` when done.
+    it via ``physical.release_checkpoints`` when done.
     """
     _, raw_pairs, vocab = _bpe_train_rows(
         docs, text_col, n_merges, checkpoint_every, keep_vocab=True

@@ -19,14 +19,11 @@ import pandas as pd  # module-level so PEP-563 string hints on pandas
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: fanout_weight for the vector-scoring fan-outs (brute-force cosine,
-#: in-bucket LSH scoring): the per-row work is an interpreted
-#: higher-order-function dot product times the candidate multiplicity,
-#: far above the scan baseline ensure_parallelism's 256 KiB/task
-#: constant was sized for (ADVICE r9: quadratic callers sized tasks by
-#: input bytes).  Adjudicated by the same interleaved A/B protocol as
-#: dedup.PAIR_JOIN_FANOUT_WEIGHT — table in OPTIMIZATION_r10.md.
-VECTOR_FANOUT_WEIGHT = 8
+from ..plans.physical import (
+    VECTOR_FANOUT_WEIGHT,
+    ensure_parallelism,
+    truncate_lineage,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -226,8 +223,6 @@ def brute_force_topk(
     the per-query top-k aggregate; the window partitions by query id so
     ranking state is per-query.
     """
-    from .dedup import ensure_parallelism
-
     q = with_norm(queries, id_col, vec_col).alias("q")
     c = with_norm(
         ensure_parallelism(corpus, fanout_weight=VECTOR_FANOUT_WEIGHT),
@@ -378,9 +373,7 @@ def brute_force_topk_matrix(
             # fast path stays fully lazy: its one broadcast is held by
             # the returned plan (bounded by the query-set size).  The
             # per-block checkpoints back the returned plan; callers done
-            # with the result free them via dedup.release_checkpoints.
-            from .dedup import truncate_lineage
-
+            # with the result free them via release_checkpoints.
             part = truncate_lineage(part)
             bc.destroy()
         partials = part if partials is None else partials.unionAll(part)
@@ -429,8 +422,6 @@ def ivf_topk(
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-
-    from .dedup import ensure_parallelism
 
     corpus = ensure_parallelism(corpus)
     as_vec = corpus.select(
@@ -517,8 +508,6 @@ def sign_lsh_topk(
     shape. Recall < 1.0 by construction (neighbors in other buckets are
     missed); multi-probe or multiple hash tables raise it.
     """
-    from .dedup import ensure_parallelism
-
     q = with_norm(queries, id_col, vec_col).withColumn("bucket", sign_bucket(F.col("vec"), bits))
     c = with_norm(
         ensure_parallelism(corpus, fanout_weight=VECTOR_FANOUT_WEIGHT),
@@ -627,8 +616,6 @@ def assign_cells(
     (measured 7s single-task at sf0.1).  Pass ``fan_out=False`` for a
     small QUERY side — a handful of probe rows gains nothing from a
     repartition exchange and the plan walk it costs."""
-    from .dedup import ensure_parallelism
-
     side = ensure_parallelism(side) if fan_out else side
     sn = with_norm(side, id_col, vec_col)
     scored = sn.crossJoin(F.broadcast(cells)).select(
@@ -688,8 +675,6 @@ def assign_cells_fast(
     vectors (NaN cosine) rank GREATEST with the label tie-break,
     matching Spark's NaN ordering in ``assign_cells``."""
     import numpy as np
-
-    from .dedup import ensure_parallelism
 
     cells_pdf = cells.toPandas()
     id_t = side.schema[id_col].dataType.simpleString()
@@ -981,12 +966,9 @@ def cell_near_dup_pairs(
     # branch on the raw lineage and the assignment ran twice).  The
     # blocks back the RETURNED plan, so they cannot be freed in-call;
     # callers done with the result free them explicitly with
-    # dedup.release_checkpoints(result) — GC does NOT reclaim them
-    # under PySpark's default pinned-thread mode (measured r9; see
-    # truncate_lineage).  At any scale this is 2 small columns x
-    # n_probe rows, disk-spillable.
-    from .dedup import truncate_lineage
-
+    # release_checkpoints(result) — GC does NOT reclaim them under
+    # PySpark's default pinned-thread mode (measured r9).  At any scale
+    # this is 2 small columns x n_probe rows, disk-spillable.
     assign = truncate_lineage(assign)
     # vectors join in WITHOUT the interpreted norm fold (norms fall out
     # of the stacked matrix below for the cost of one einsum)

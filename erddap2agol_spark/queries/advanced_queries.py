@@ -16,6 +16,7 @@ from ..functions.datetimes import epoch_us
 from ..functions.dsl import numeric_prefix_cast
 from ..operators import dedup
 from ..operators.text import quality_score
+from ..plans import physical
 from ..sources.tables import load_table
 from . import register
 
@@ -164,7 +165,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # result is the one cache entry the caller owns
     sh = dedup.simhash16(docs, "doc_id", "text").persist()
     # returned frame: eager checkpoint, not persist (releasable; r9)
-    out = dedup.truncate_lineage(dedup.simhash_near_pairs(sh, max_hamming=2))
+    out = physical.truncate_lineage(dedup.simhash_near_pairs(sh, max_hamming=2))
     sh.unpersist(True)
     return out
 

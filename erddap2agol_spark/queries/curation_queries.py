@@ -12,6 +12,11 @@ from pyspark.sql import functions as F
 
 from ..operators import sampling
 from ..operators.similarity import quantize_int8
+from ..plans.physical import (
+    QUALITY_GATE_FANOUT_WEIGHT,
+    ensure_parallelism,
+    truncate_lineage,
+)
 from ..sources.tables import load_table
 from . import register
 
@@ -523,7 +528,6 @@ def build_corpus_manifest(
     """
     from pyspark.sql import Window
 
-    from ..operators.dedup import ensure_parallelism, truncate_lineage
     from ..operators.sampling import hash_bucket
     from ..operators.text import bloom_contamination
 
@@ -536,7 +540,8 @@ def build_corpus_manifest(
     # each single-task at sf0.1).  Weighted fan-out sizes the gate
     # stage by compute, not bytes; a no-op on an already-wide scan.
     corpus = ensure_parallelism(
-        docs.where(~F.col("source").isin(*bench)), fanout_weight=4
+        docs.where(~F.col("source").isin(*bench)),
+        fanout_weight=QUALITY_GATE_FANOUT_WEIGHT,
     )
     if n_shards is None:
         # sizing probe: corpus row count BEFORE gating (upper bound on

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup
 from ..operators.graph import triangle_count
 from ..operators.search import cooccurrence_pmi
+from ..plans import physical
 from ..sources.tables import load_table
 from . import register
 
@@ -140,9 +141,8 @@ def sim_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh.unpersist(True)
     # eager checkpoint, not persist, for the returned frame: a persist
     # is CacheManager-pinned until explicit unpersist (r9 finding) and
-    # would leak one entry per call; the checkpoint is releasable via
-    # dedup.release_checkpoints
-    out = dedup.truncate_lineage(triangle_count(edges, a="doc_a", b="doc_b"))
+    # would leak one entry per call; the checkpoint is releasable
+    out = physical.truncate_lineage(triangle_count(edges, a="doc_a", b="doc_b"))
     edges.unpersist(True)
     return out
 

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
+from ..plans import physical
 
 _BATCH_COL = "ingest_batch"
 
@@ -144,7 +145,7 @@ def ingest_batch(
         # Truncate lineage BEFORE writing: the second write must not
         # re-execute the store probe after the first write has replaced
         # the store partition under it (replay would read deleted files).
-        keep_bands = dedup.truncate_lineage(
+        keep_bands = physical.truncate_lineage(
             bands0.join(F.broadcast(dropped), "doc", "left_anti")
         )
         keep_ids = keep_bands.select("doc").distinct()
@@ -160,9 +161,8 @@ def ingest_batch(
         ).write.mode("overwrite").parquet(f"{out_dir}/{part}")
         # both writes are done — free the batch's checkpoint blocks
         # explicitly (one leaked entry PER MICRO-BATCH otherwise: GC
-        # never reclaims these under pinned-thread py4j, see
-        # dedup.truncate_lineage)
-        dedup.release_checkpoints(keep_bands)
+        # never reclaims these under pinned-thread py4j)
+        physical.release_checkpoints(keep_bands)
         return n_kept
     finally:
         bands.unpersist()

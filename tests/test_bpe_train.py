@@ -8,6 +8,7 @@ zero-row case."""
 from __future__ import annotations
 
 from erddap2agol_spark.operators.lm import BPE_SENTINEL_BASE, bpe_train
+from erddap2agol_spark.plans.physical import release_checkpoints, truncate_lineage
 
 
 def _py_bpe(word_freq: dict[str, int], n_merges: int):
@@ -100,7 +101,7 @@ def test_early_stop_and_empty(spark):
     assert bpe_train(single, "text", n_merges=0).count() == 0
 
 
-def test_checkpoint_chain_releases_and_matches(spark):
+def test_checkpoint_chain_releases_and_matches(spark, rdd_ids):
     """checkpoint_every smaller than n_merges must (a) not change the
     result and (b) leave ZERO net persistent-RDD blocks behind — the
     trainer's output is a local relation, so every internal checkpoint
@@ -109,21 +110,16 @@ def test_checkpoint_chain_releases_and_matches(spark):
     docs = spark.createDataFrame(
         [(" ".join([w] * c),) for w, c in freq.items()], "text string"
     )
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    base = rdd_ids()
     a = [tuple(r) for r in bpe_train(docs, "text", 6, checkpoint_every=2).collect()]
     b = [tuple(r) for r in bpe_train(docs, "text", 6, checkpoint_every=16).collect()]
     assert a == b == _py_bpe(freq, 6)
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= base
+    assert not (rdd_ids() - base)
 
 
 def test_caller_checkpoint_input_survives(spark):
     """Input-shield contract: a checkpoint-backed caller frame must
     remain readable after bpe_train's internal release chain runs."""
-    from erddap2agol_spark.operators.dedup import (
-        release_checkpoints,
-        truncate_lineage,
-    )
-
     docs = truncate_lineage(
         spark.createDataFrame([("low low lower",)], "text string")
     )
@@ -277,28 +273,29 @@ def test_histogram_early_stop_returns_chars(spark):
     assert got == {"a": 2, "b": 1, "c": 1}
 
 
-def test_histogram_single_corpus_scan(spark):
+def test_histogram_single_corpus_scan(spark, rdd_ids):
     """The encode half must REUSE the trainer's vocabulary checkpoint:
     exactly one corpus-sized token aggregation per call (review r9),
     and the result's backing checkpoint is caller-releasable."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
     from erddap2agol_spark.operators.lm import bpe_symbol_histogram
 
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    base = rdd_ids()
     docs = spark.createDataFrame([("low lower low",)], "text string")
     hist = bpe_symbol_histogram(docs, "text", 2, top=50)
     hist.collect()
     # exactly the ONE kept vocabulary checkpoint backs the plan
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == base + 1
+    new = rdd_ids() - base
+    assert len(new) == 1
+    live = rdd_ids()
     assert release_checkpoints(hist) >= 1
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= base
+    # the release frees exactly that id and nothing else the call saw
+    assert live - rdd_ids() - base == new
 
 
 def test_doc_token_counts_match_mirror(spark):
     """Per-document counts under the trained table: cross-checked
     against the list-algebra mirror's final vocabulary segmentation,
     and token mass conserved against the trainer's compression curve."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
     from erddap2agol_spark.operators.lm import bpe_doc_token_counts, bpe_train
 
     texts = {

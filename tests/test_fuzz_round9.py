@@ -10,6 +10,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from erddap2agol_spark.plans import physical
 from erddap2agol_spark.plans import snapshots as snap
 
 
@@ -132,4 +133,4 @@ def test_leakage_safe_split_never_straddles(spark):
         for r in out:
             by_cluster.setdefault(r.cluster_id, set()).add(r.split)
         assert all(len(s) == 1 for s in by_cluster.values()), f"seed {seed}"
-        dedup.release_checkpoints(comp)
+        physical.release_checkpoints(comp)

@@ -93,6 +93,19 @@ def test_pagerank_broadcast_rounds_are_broadcast_joins(spark):
     assert plan.count("BroadcastHashJoin") >= 5
 
 
+def test_pagerank_int_deg_only_under_probe(spark):
+    """The int32 deg narrowing rests on the |V| probe's proof that |V|
+    fits a broadcast; a caller-forced broadcast has no such proof and
+    keeps the long."""
+    k10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
+    dense = spark.createDataFrame(k10, "a long, b long")
+    int_deg = re.compile(r" as int\) AS deg#")
+    forced = pagerank(dense, iterations=2, persist_each=False, broadcast_ranks=True)
+    probed = pagerank(dense, iterations=2, persist_each=False)  # dense: broadcast
+    assert not int_deg.search(_plan_of(forced))
+    assert int_deg.search(_plan_of(probed))
+
+
 def test_regime_probe_dispatch(spark):
     """Auto probe: dense graph (avg degree >= 8) picks broadcast, the
     sparse test graph keeps the equi-join form.  Proxy via plan shape:

@@ -12,6 +12,7 @@ from erddap2agol_spark.operators.linkage import (
     fuzzy_variant_pairs,
     value_dictionary,
 )
+from erddap2agol_spark.plans.physical import release_checkpoints
 
 
 def _first_tok_block():
@@ -105,17 +106,15 @@ def test_lpa_plan_no_window(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_lpa_unpersists_scaffolding(spark):
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+def test_lpa_unpersists_scaffolding(spark, rdd_ids):
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "a int, b int")
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    before = rdd_ids()
     out = label_propagation(edges, iterations=2)
     # r9: the returned frame is checkpoint-backed (persist would be
     # CacheManager-pinned and never GC-reclaimed) — release explicitly
     release_checkpoints(out)
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    assert after <= before
+    assert not (rdd_ids() - before)
 
 
 class TestPointerDoubling:

@@ -15,6 +15,7 @@ from erddap2agol_spark.operators.lm import (
     doc_bigrams,
     token_vocabulary,
 )
+from erddap2agol_spark.plans.physical import release_checkpoints
 
 
 @pytest.fixture()
@@ -114,7 +115,6 @@ def test_cross_entropy_agg_matches_two_pass(spark, tiny_docs):
     from the per-(doc,pair) aggregate) must produce the SAME scores as
     the two-pass plan — including the 1-token doc dropping out and the
     vocabulary counting doc-final-only tokens via the NULL-padded zip."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
     from erddap2agol_spark.operators.lm import bigram_cross_entropy_agg
 
     two = {

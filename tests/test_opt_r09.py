@@ -14,25 +14,18 @@ import gc
 
 from pyspark.sql import functions as F
 
-from erddap2agol_spark.operators.dedup import release_checkpoints
+from erddap2agol_spark.plans.physical import (
+    FANOUT_INPUT_BYTES_PER_TASK,
+    LOOP_ROWS_PER_TASK,
+    _input_bytes,
+    _loop_partitions,
+    _scan_units,
+    ensure_parallelism,
+    release_checkpoints,
+)
 from erddap2agol_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids (not just the count) of persistent RDDs: a prior test's
-    checkpoint may be reclaimed by the async ContextCleaner WHILE this
-    test runs, so count deltas are racy — id sets are not."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
 
 
 def _edges(spark):
@@ -42,7 +35,7 @@ def _edges(spark):
     return copurchase_edges(li, "l_orderkey", "l_partkey")
 
 
-def test_pagerank_call_scoped_caches(spark):
+def test_pagerank_call_scoped_caches(spark, rdd_ids):
     """r10 lifecycle: the call leaves NO CacheManager entry (nothing can
     plan-match a rebuilt identical plan) and only the deg/g scaffold
     checkpoints backing the LAZY returned plan — the edge checkpoint is
@@ -50,33 +43,33 @@ def test_pagerank_call_scoped_caches(spark):
     restores the persistent-RDD table to base."""
     from erddap2agol_spark.operators.graph import pagerank
 
-    base = _persistent_rdd_ids(spark)
+    base = rdd_ids()
     out = pagerank(_edges(spark), a="pa", b="pb", iterations=2)
     assert out.count() > 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "pagerank left a CacheManager-pinned persist behind"
     )
-    live = _persistent_rdd_ids(spark) - base
+    live = rdd_ids() - base
     assert len(live) == 2, (
         f"expected exactly the deg+g scaffold checkpoints, got {len(live)}"
     )
     release_checkpoints(out)
-    assert not (_persistent_rdd_ids(spark) - base)
+    assert not (rdd_ids() - base)
     gc.collect()
 
 
-def test_label_propagation_call_scoped_caches(spark):
+def test_label_propagation_call_scoped_caches(spark, rdd_ids):
     from erddap2agol_spark.operators.graph import label_propagation
 
-    base = _persistent_rdd_ids(spark)
+    base = rdd_ids()
     out = label_propagation(_edges(spark), iterations=2, a="pa", b="pb")
     assert out.count() > 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "label_propagation left a CacheManager-pinned persist behind"
     )
-    assert len(_persistent_rdd_ids(spark) - base) == 1
+    assert len(rdd_ids() - base) == 1
     release_checkpoints(out)
-    assert not (_persistent_rdd_ids(spark) - base)
+    assert not (rdd_ids() - base)
     gc.collect()
 
 
@@ -90,10 +83,6 @@ def test_ensure_parallelism_sees_through_empty_splits(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from erddap2agol_spark.operators.dedup import (
-        _scan_units,
-        ensure_parallelism,
-    )
 
     rng = np.random.default_rng(7)
     n = 60_000
@@ -125,11 +114,6 @@ def test_ensure_parallelism_size_derived_target(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from erddap2agol_spark.operators.dedup import (
-        FANOUT_INPUT_BYTES_PER_TASK,
-        _input_bytes,
-        ensure_parallelism,
-    )
 
     small_dir = tmp_path / "small"
     small_dir.mkdir()
@@ -146,7 +130,17 @@ def test_ensure_parallelism_size_derived_target(spark, tmp_path):
     assert ensure_parallelism(small, min_partitions=2).rdd.getNumPartitions() >= 2
 
 
-def test_jaccard_auto_shared_probe_matches_posting_join(spark):
+def test_loop_partitions_none_at_the_cap(spark):
+    """Iterated relations compact to ~LOOP_ROWS_PER_TASK rows per task
+    below defaultParallelism; at the cap the width is left ambient."""
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(1)
+    assert _loop_partitions(0, df) == 1
+    assert _loop_partitions(LOOP_ROWS_PER_TASK * (par - 1), df) == par - 1
+    assert _loop_partitions(LOOP_ROWS_PER_TASK * par, df) is None
+
+
+def test_jaccard_auto_shared_probe_matches_posting_join(spark, rdd_ids):
     """The shared-explode dispatch path (exact probe aggregated over
     the SAME cached shingle relation the join reads) must return
     exactly ngram_jaccard_pairs' result, with clean cache lifecycle."""
@@ -156,7 +150,7 @@ def test_jaccard_auto_shared_probe_matches_posting_join(spark):
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    base = _persistent_rdd_count(spark)
+    base = rdd_ids()
     auto = jaccard_pairs_auto(docs, "doc_id", "text", shingle_n=3, threshold=0.5)
     ref = ngram_jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.5)
     a = {tuple(r) for r in auto.collect()}
@@ -167,5 +161,5 @@ def test_jaccard_auto_shared_probe_matches_posting_join(spark):
     )
     release_checkpoints(auto)
     release_checkpoints(ref)
-    assert _persistent_rdd_count(spark) <= base
+    assert not (rdd_ids() - base)
     gc.collect()

@@ -9,6 +9,7 @@ from erddap2agol_spark.operators.graph import pagerank
 from erddap2agol_spark.operators.sampling import shuffle_order
 from erddap2agol_spark.operators.spatial import zorder_key
 from erddap2agol_spark.operators.text import bloom_contamination
+from erddap2agol_spark.plans.physical import release_checkpoints
 
 
 def test_pagerank_empty_edges(spark):
@@ -253,12 +254,10 @@ class TestSparseCosine:
         uncapped.unpersist()
         assert m == 15  # all pairs share the boilerplate dimension
 
-    def test_no_cache_leak(self, spark):
+    def test_no_cache_leak(self, spark, rdd_ids):
         from erddap2agol_spark.operators.dedup import sparse_cosine_pairs
 
-        from erddap2agol_spark.operators.dedup import release_checkpoints
-
-        before = len(spark.sparkContext._jsc.getPersistentRDDs())
+        before = rdd_ids()
         out = sparse_cosine_pairs(
             spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id int, text string"),
             "doc_id",
@@ -268,8 +267,7 @@ class TestSparseCosine:
         # r9: the result is checkpoint-backed (releasable), not a
         # CacheManager-pinned persist (which GC never reclaims)
         release_checkpoints(out)
-        after = len(spark.sparkContext._jsc.getPersistentRDDs())
-        assert after <= before
+        assert not (rdd_ids() - before)
 
 
 class TestJaccardPrefixFilter:
@@ -325,7 +323,7 @@ class TestJaccardPrefixFilter:
         assert not any(102 in p for p in out)
 
     def test_prefix_explode_smaller_than_full(self, spark):
-        from erddap2agol_spark.operators.dedup import ensure_parallelism, word_shingles
+        from erddap2agol_spark.operators.dedup import word_shingles
 
         docs = self._docs(spark)
         sets = docs.select(
@@ -345,17 +343,13 @@ class TestJaccardPrefixFilter:
         assert pref_rows < full_rows * 0.45
 
 
-def test_simhash_query_releases_scaffolding(spark):
+def test_simhash_query_releases_scaffolding(spark, rdd_ids):
     """simhash_hamming_pairs owns exactly ONE cache entry after running
     (its materialized result); the fingerprint scaffolding is released
     (the VERDICT r3 #3 lifecycle, applied at the query layer too)."""
     from erddap2agol_spark.queries import REGISTRY, _load_all
 
     _load_all()
-
-    def ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
     # start from a clean cache: the CacheManager dedups by LOGICAL PLAN,
     # so a leaked entry from an earlier run of the same query (e.g. the
     # parity sweep) would be silently reused and no new id would appear
@@ -363,13 +357,11 @@ def test_simhash_query_releases_scaffolding(spark):
     # id-set arithmetic, not global counts, because the async
     # ContextCleaner may drop old unreferenced entries at any time.
     spark.catalog.clearCache()
-    before = ids()
+    before = rdd_ids()
     out = REGISTRY["simhash_hamming_pairs"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    new_ids = ids() - before
+    new_ids = rdd_ids() - before
     assert len(new_ids) == 1  # result only; fingerprint table released
-    from erddap2agol_spark.operators.dedup import release_checkpoints
-
     release_checkpoints(out)  # r9: checkpoint-backed result
-    assert not (ids() - before)
+    assert not (rdd_ids() - before)

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from erddap2agol_spark.operators.windows import grouped_row_number
+from erddap2agol_spark.plans.physical import release_checkpoints, truncate_lineage
 from erddap2agol_spark.queries.curation_queries import build_corpus_manifest
 from erddap2agol_spark.sources.tables import load_table
 
@@ -63,21 +64,14 @@ def test_corpus_manifest_derived_shards(spark):
     assert n_shards_seen > 8
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-def test_iterative_rounds_release_previous(spark):
+def test_iterative_rounds_release_previous(spark, rdd_ids):
     """Each connected-components round must free the previous round's
     checkpoint explicitly (truncate_lineage release chaining): after
     convergence only the FINAL round's blocks remain, releasable
     through the returned plan."""
-    from erddap2agol_spark.operators.dedup import (
-        connected_components,
-        release_checkpoints,
-    )
+    from erddap2agol_spark.operators.dedup import connected_components
 
-    base = _persistent_rdd_count(spark)
+    base = rdd_ids()
     # two chains + an isolated pair: converges in a few rounds
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
@@ -86,28 +80,25 @@ def test_iterative_rounds_release_previous(spark):
     comp = connected_components(edges, "a", "b", max_iter=8)
     got = {r.node: r.component for r in comp.collect()}
     assert got[4] == got[1] and got[12] == got[10] and got[21] == got[20]
-    in_flight = _persistent_rdd_count(spark)
-    assert in_flight <= base + 2, (
-        f"round checkpoints accumulated: {base} -> {in_flight}"
-    )
+    in_flight = rdd_ids() - base
+    assert len(in_flight) <= 2, f"round checkpoints accumulated: {in_flight}"
     release_checkpoints(comp)
-    assert _persistent_rdd_count(spark) <= base
+    assert not (rdd_ids() - base)
 
 
-def test_near_dup_repeated_calls_reclaim_blocks(spark):
+def test_near_dup_repeated_calls_reclaim_blocks(spark, rdd_ids):
     """VERDICT r8 #7: repeated hot-cell-split calls in one session must
     not accumulate checkpoint blocks.  GC-driven reclamation does NOT
     happen under PySpark's default pinned-thread mode (measured r9:
     the py4j finalizer removes the JVM Dataset binding but the
     checkpointed RDD stays strongly rooted), so the contract is the
-    EXPLICIT one: dedup.release_checkpoints(result) after consuming
-    each result returns the persistent-RDD table to its pre-call level
-    — >=3 sequential calls, zero net growth."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    EXPLICIT one: release_checkpoints(result) after consuming each
+    result returns the persistent-RDD table to its pre-call level —
+    >=3 sequential calls, zero net growth."""
     from erddap2agol_spark.operators.similarity import cell_near_dup_pairs
 
     emb = load_table(spark, SF, "embeddings").withColumn("one_cell", F.lit(0))
-    base = _persistent_rdd_count(spark)
+    base = rdd_ids()
     rows_per_call = []
     for _ in range(3):
         df = cell_near_dup_pairs(
@@ -130,15 +121,13 @@ def test_near_dup_repeated_calls_reclaim_blocks(spark):
         # and reliable checkpoints never appear in getPersistentRDDs.
         # The invariant under test is zero NET growth + a releasable
         # result, asserted below for either checkpoint mode.
-        assert _persistent_rdd_count(spark) <= base, (
-            "release_checkpoints left blocks behind: "
-            f"{base} -> {_persistent_rdd_count(spark)}"
-        )
+        left = rdd_ids() - base
+        assert not left, f"release_checkpoints left blocks behind: {left}"
     assert len(set(rows_per_call)) == 1, "repeated calls diverged"
     gc.collect()  # drop any lingering python-side refs before other tests
 
 
-def test_dedup_pipeline_cache_hygiene(spark):
+def test_dedup_pipeline_cache_hygiene(spark, rdd_ids):
     """r9 finding: DataFrame.persist is CacheManager-pinned until an
     explicit unpersist — never GC-reclaimed — so operator-terminal
     materializations use releasable checkpoints instead.  A full
@@ -148,18 +137,16 @@ def test_dedup_pipeline_cache_hygiene(spark):
     from erddap2agol_spark.operators.dedup import (
         connected_components,
         ngram_jaccard_pairs,
-        release_checkpoints,
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    base = _persistent_rdd_count(spark)
+    base = rdd_ids()
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.5)
     comp = connected_components(pairs, release_input=True)
     assert comp.count() > 0
     release_checkpoints(comp)
-    assert _persistent_rdd_count(spark) <= base, (
-        f"dedup pipeline leaked storage: {base} -> {_persistent_rdd_count(spark)}"
-    )
+    left = rdd_ids() - base
+    assert not left, f"dedup pipeline leaked storage: {left}"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "a CacheManager-pinned persist survived the pipeline"
     )
@@ -171,10 +158,6 @@ def test_iterative_ops_shield_caller_input(spark):
     checkpoint, so round 1's release touches only that internal copy.
     A checkpoint-backed input (the new pair-builder contract) must stay
     readable after kcore and pointer doubling consume it."""
-    from erddap2agol_spark.operators.dedup import (
-        release_checkpoints,
-        truncate_lineage,
-    )
     from erddap2agol_spark.operators.graph import (
         kcore,
         pointer_doubling_closure,

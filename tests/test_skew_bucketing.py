@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from erddap2agol_spark.operators import skew
 from erddap2agol_spark.operators.text import tfidf_features
+from erddap2agol_spark.plans.physical import release_checkpoints
 from erddap2agol_spark.sources.tables import load_table
 from erddap2agol_spark.streaming import nrt
 
@@ -195,7 +196,7 @@ def test_lsh_band_salting_result_invariant(spark, boilerplate_docs):
     assert base == salted and base  # identical pairs, non-empty
 
 
-def test_dedup_pair_builders_release_scaffolding(spark):
+def test_dedup_pair_builders_release_scaffolding(spark, rdd_ids):
     """VERDICT r3 #3: lsh_candidate_pairs / ngram_jaccard_pairs must not
     leak their internal persist (signature table / shingle explode)
     across invocations.  Contract: the ONLY storage entry left behind is
@@ -204,28 +205,15 @@ def test_dedup_pair_builders_release_scaffolding(spark):
     from erddap2agol_spark.operators import dedup
 
     docs = load_table(spark, SF, "documents").limit(200)
-
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    def rdd_ids():
-        it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    # set-based, not count-based: another test's stale entries may be
-    # reclaimed concurrently; only entries THIS test creates matter
     base = rdd_ids()
     out = dedup.lsh_candidate_pairs(docs, "doc_id", "text", n_perm=8, rows_per_band=2)
     assert len(rdd_ids() - base) == 1  # result only; signature cache released
     # r9: results are checkpoint-backed (releasable), not
     # CacheManager-pinned persists (never GC-reclaimed)
-    dedup.release_checkpoints(out)
+    release_checkpoints(out)
     assert not (rdd_ids() - base)
 
     out2 = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", max_doc_freq=100)
     assert len(rdd_ids() - base) == 1  # result only; shingle cache released
-    dedup.release_checkpoints(out2)
+    release_checkpoints(out2)
     assert not (rdd_ids() - base)
